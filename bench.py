@@ -344,7 +344,7 @@ def _dedup_quality(spark, sf_dir: str) -> dict:
     corpus_sim = docs.unionByName(copies)
     sigs = D.simhash_signatures(corpus_sim, "text", "doc_id")
     cands = D.simhash_candidates(sigs, max_hamming=SIMHASH_MAX_HAMMING)
-    # r8: measure the VERIFIED pipeline (masked-key blocking + exact
+    # r8: measure the VERIFIED pipeline (permuted-prefix blocking + exact
     # multiset-jaccard verification), the shape dedup_simhash ships
     got = {
         (r["doc_a"], r["doc_b"])

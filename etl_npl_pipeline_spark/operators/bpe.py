@@ -47,7 +47,8 @@ SEP = "\x01"
 @contextmanager
 def _round_confs(spark: SparkSession, shuffle_partitions: int = 4):
     """Scoped session confs for the per-round jobs of the training
-    loop (r14; the drain_confs doctrine applied to the trainer):
+    loop (r14; the streaming.events.drain confs applied to the
+    trainer, plus AQE off):
 
     - whole-stage codegen OFF: every round plans a FRESH query (the
       merge literals are embedded in the generated code), so janino

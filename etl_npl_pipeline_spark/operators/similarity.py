@@ -1,19 +1,22 @@
 """Similarity search over embedding columns (array<double>).
 
-- ``cosine(a, b)``: zip_with product + left-to-right aggregate sum.
-  Deterministic element order ⇒ bit-identical to a DuckDB
-  list_reduce oracle (verified) — no UDF, stays in codegen.
+- ``dot`` / ``pair_dot``: left-to-right dot products — the scalar
+  HOF fold and its Arrow-vectorized twin accumulate in the same
+  dim order, so both stay bit-identical to a DuckDB list_reduce
+  oracle. Pairwise cosines run as ``pair_dot`` over
+  ``l2_normalize``d vectors.
 - ``brute_force_topk``: exact baseline AND the recall verifier.
   Chunk-block cogroup decomposition (r10): both sides stay
   distributed, so corpus-as-queries sweeps verify at any |Q|. Cost
   is inherently |Q| x |corpus| x dim, spread across executors.
-- ``lsh_topk``: single-table random-hyperplane LSH baseline.
+- ``lsh_topk_multi``: multi-table, multiprobe random-hyperplane LSH.
   Signatures come from seed-derived hyperplanes recomputed per
   Arrow batch (no stored model — any executor can regenerate the
-  projection). Candidates = full-signature bucket collisions;
-  top-k within candidates. At 100 TB the bucket join replaces the
-  |Q| x |corpus| product with |Q| x bucket_size. Production recall
-  needs ``lsh_topk_multi`` (L tables + multiprobe).
+  projection); the bucket join replaces the |Q| x |corpus| product
+  with |Q| x bucket_size, and exact cosine re-ranks the candidates.
+- ``embedding_near_dups_blocked`` / ``semantic_near_dups``: exact
+  pairwise cosine within blocking-key groups (a label, or k-means
+  cells for SemDeDup), capped per block.
 """
 
 from __future__ import annotations
@@ -22,8 +25,6 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-
-N_PLANES = 16
 
 
 def dot(a: F.Column, b: F.Column) -> F.Column:
@@ -79,18 +80,6 @@ def pair_dot(a: F.Column, b: F.Column) -> F.Column:
         return pd.Series(acc)
 
     return _pair_dot(a, b)
-
-
-def cosine(a: F.Column, b: F.Column) -> F.Column:
-    """Cosine similarity of two array<double> columns, computed in a
-    fixed order for cross-engine determinism."""
-    na = F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    nb = F.sqrt(
-        F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    return dot(a, b) / (na * nb)
 
 
 def brute_force_topk(
@@ -242,90 +231,6 @@ def brute_force_topk(
     )
 
 
-def lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = N_PLANES,
-) -> DataFrame:
-    """Approximate top-k: candidates share the full hyperplane
-    signature bucket; exact cosine re-ranks within the bucket.
-
-    Bucket equi-join scales as sum of bucket sizes, not |Q|x|C|.
-    Recall trades off with n_planes (more planes → smaller buckets).
-    Signatures use the same one-matmul-per-batch Arrow UDF as the
-    multi-table variant (n_tables=1) — Catalyst HOF folds evaluate
-    interpreted per element and are ~100x slower here.
-    """
-    sig_udf = _lsh_table_signatures(n_planes, 1)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        l2_normalize(F.col(vec_col)).alias("qv"),
-        sig_udf(F.col(vec_col)).getItem(0).alias("sig"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        l2_normalize(F.col(vec_col)).alias("cv"),
-        sig_udf(F.col(vec_col)).getItem(0).alias("sig"),
-    )
-    cand = (
-        q.join(c, "sig")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            pair_dot(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )
-
-
-def embedding_near_dups(
-    df: DataFrame,
-    block_col: str,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Near-duplicate pairs by cosine within blocking-key groups.
-
-    The block key (a label, a cluster id, an LSH bucket) bounds the
-    pairwise product per group — the difference between O(n²) and
-    O(sum of group²) at corpus scale.
-    """
-    a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(block_col).alias("blk_a"),
-        l2_normalize(F.col(vec_col)).alias("va"),
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(block_col).alias("blk_b"),
-        l2_normalize(F.col(vec_col)).alias("vb"),
-    )
-    return (
-        a.join(
-            b,
-            (F.col("blk_a") == F.col("blk_b")) & (F.col("id_a") < F.col("id_b")),
-        )
-        .select(
-            "id_a",
-            "id_b",
-            pair_dot(F.col("va"), F.col("vb")).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-    )
-
-
 def _lsh_table_signatures(n_planes: int, n_tables: int, seed: int = 7):
     """Arrow pandas_udf computing all L table signatures per vector
     in one numpy pass: X @ R.T > 0, bits packed per table.
@@ -334,8 +239,7 @@ def _lsh_table_signatures(n_planes: int, n_tables: int, seed: int = 7):
     stateless (no model to ship), and one BLAS matmul replaces
     n_tables*n_planes interpreted HOF folds per row (measured:
     Catalyst HOF lambdas evaluate interpreted per element; see
-    minhash_signatures). Shared by lsh_topk (n_tables=1) and
-    lsh_topk_multi.
+    minhash_signatures).
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -437,10 +341,10 @@ def embedding_near_dups_blocked(
     vec_col: str = "embedding",
     max_block: int = DEFAULT_MAX_BLOCK,
 ) -> DataFrame:
-    """Vectorized twin of embedding_near_dups: one applyInPandas
-    call per block computes the whole block's pairwise cosine in
-    numpy instead of an interpreted HOF fold per pair (measured ~3x
-    on 2k vectors; the HOF dot evaluates per element).
+    """Near-duplicate pairs by cosine within blocking-key groups: one
+    applyInPandas call per block computes the whole block's pairwise
+    cosine in numpy instead of an interpreted HOF fold per pair
+    (measured ~3x on 2k vectors; the HOF dot evaluates per element).
 
     Determinism contract: the DuckDB oracle folds dot products
     left-to-right starting at 0.0. np.dot/matmul use SIMD/pairwise

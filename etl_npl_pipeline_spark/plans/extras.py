@@ -2,7 +2,7 @@
 §2.4 L12, §2.5 ST1-ST2).
 
 The streaming queries drain a real Structured Streaming query
-(availableNow trigger → memory sink) and return the materialized
+(streaming.events.drain → memory sink) and return the materialized
 table — the driver's oracle then checks the streaming result equals
 the batch semantics (windowed agg / sessionization) exactly.
 """
@@ -47,7 +47,7 @@ MEDIA_REPLICA_MOD = 1_000_000
 
 def stream_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tumbling-window agg; oracle = the batch SQL (the
-    availableNow drain must reproduce batch semantics exactly)."""
+    bounded drain must reproduce batch semantics exactly)."""
     return stream_windowed_counts(spark, sf_dir).orderBy("hour", "event_type")
 
 
@@ -1805,7 +1805,7 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     (window, type) group and late/out-of-order arrivals within the
     watermark fold in correctly (the property a lag()-based
     formulation cannot have in a stream). Oracle = the batch OHLC
-    SQL: the availableNow drain must reproduce batch semantics
+    SQL: the bounded drain must reproduce batch semantics
     exactly, tie-breaks included. The late/too-late claim is PROVEN
     (not asserted) by tests/test_ohlc_late_data.py: an append-mode
     multi-batch drain folds an in-watermark out-of-order row into

@@ -337,13 +337,12 @@ def stream_agg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{_STREAM_IVM_TMP}/deltas/b={batch_id}"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{_STREAM_IVM_TMP}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    from etl_npl_pipeline_spark.streaming.events import drain
+
+    drain(
+        stream, "stream_agg_incremental", sink,
+        checkpoint=f"{_STREAM_IVM_TMP}/ckpt",
     )
-    q.awaitTermination()
     n_batches = len(
         [d for d in os.listdir(f"{_STREAM_IVM_TMP}/deltas") if d.startswith("b=")]
     )
@@ -509,13 +508,9 @@ def stream_cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         _apply_cdc_batch(spark, batch_df)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{_CDC_TMP}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    from etl_npl_pipeline_spark.streaming.events import drain
+
+    drain(stream, "stream_cdc_scd2", sink, checkpoint=f"{_CDC_TMP}/ckpt")
     final = max(
         int(d.rsplit("state_seq", 1)[1])
         for d in os.listdir(_CDC_TMP)
@@ -782,18 +777,9 @@ def stream_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(f"{tmp}/deltas/b={batch_id}")
 
-    from etl_npl_pipeline_spark.streaming.events import drain_confs
+    from etl_npl_pipeline_spark.streaming.events import drain
 
-    # one-shot drain: per-micro-batch codegen never amortizes (ST15
-    # pattern, r13)
-    with drain_confs(spark):
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
+    drain(stream, "stream_join_incremental", sink, checkpoint=f"{tmp}/ckpt")
     view = (
         spark.read.parquet(f"{tmp}/state")
         .unionByName(spark.read.parquet(f"{tmp}/dim_backfill"))

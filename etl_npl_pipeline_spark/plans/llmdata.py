@@ -3871,7 +3871,7 @@ TEXT_QUALITY_PROBE_INCREMENTAL_SQL = TEXT_QUALITY_PROBE_SQL
 def stream_quality_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST15 (r13): STREAMING model refresh — the third leg of the
     L79 trilogy (batch / incremental / streaming). The corpus
-    arrives as a multi-file availableNow stream
+    arrives as a multi-file bounded stream
     (maxFilesPerTrigger=1, 4 deterministic splits); each micro-batch
     contributes its 22 exact-BIGINT sufficient statistics via ONE
     aggregate inside foreachBatch, the driver ADDS them into the
@@ -3905,21 +3905,12 @@ def stream_quality_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         # own slot instead of double-adding
         per_batch[int(batch_id)] = _qp_moments(bdf)
 
-    from etl_npl_pipeline_spark.streaming.events import drain_confs
+    from etl_npl_pipeline_spark.streaming.events import drain
 
-    # one-shot drain: codegen never amortizes over 4 single-run
-    # micro-batch plans (the run_stream_to_memory doctrine, r13)
-    with drain_confs(spark):
-        q = (
-            feats.writeStream.foreachBatch(_fold)
-            .option(
-                "checkpointLocation",
-                _os.path.join(src_dir, "_ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
+    drain(
+        feats, "stream_quality_probe", _fold,
+        checkpoint=_os.path.join(src_dir, "_ckpt"),
+    )
     if not per_batch:
         return spark.createDataFrame([], "term string, value double")
     mids = sorted(per_batch)
@@ -7386,7 +7377,7 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually runs: the monitor folds each arriving shard's moments
     into a persisted accumulator and re-emits the report without
     ever rescanning history). Embeddings arrive as a 4-split
-    availableNow file stream; each micro-batch contributes its
+    bounded file stream; each micro-batch contributes its
     64x2x3 EXACT-BIGINT moments (vectors quantized to fixed-point,
     the emb_kmeans doctrine — integer sums are order- and
     batch-independent) via ONE aggregate in foreachBatch, keyed by
@@ -7417,17 +7408,12 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _fold(bdf, batch_id: int) -> None:
         per_batch[int(batch_id)] = _dm_moments(bdf)
 
-    from etl_npl_pipeline_spark.streaming.events import drain_confs
+    from etl_npl_pipeline_spark.streaming.events import drain
 
-    # one-shot drain: skip per-micro-batch codegen (ST15 pattern)
-    with drain_confs(spark):
-        q = (
-            xq.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", _os.path.join(src_dir, "_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
+    drain(
+        xq, "stream_drift_monitor", _fold,
+        checkpoint=_os.path.join(src_dir, "_ckpt"),
+    )
     acc: dict = {}
     for b in sorted(per_batch):
         acc = _dm_add(acc, per_batch[b])

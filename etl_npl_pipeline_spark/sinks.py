@@ -85,10 +85,18 @@ def write_timestamped(
     return target
 
 
-def mor_init(df: DataFrame, path: str, fmt: str = "parquet") -> str:
+# Storage format of every merge-on-read base and delta. One constant,
+# not a per-call option: a writer and a reader that disagreed would
+# misread the table.
+_MOR_FORMAT = "parquet"
+
+
+def mor_init(df: DataFrame, path: str) -> str:
     """Initialize a merge-on-read table: base snapshot at
     ``{path}/base``, deltas land under ``{path}/_deltas/v=N``."""
-    df.write.mode("overwrite").format(fmt).save(f"{path.rstrip('/')}/base")
+    df.write.mode("overwrite").format(_MOR_FORMAT).save(
+        f"{path.rstrip('/')}/base"
+    )
     return path
 
 
@@ -105,9 +113,7 @@ def _mor_versions(path: str) -> list[int]:
     )
 
 
-def mor_upsert(
-    updates: DataFrame, path: str, fmt: str = "parquet"
-) -> int:
+def mor_upsert(updates: DataFrame, path: str) -> int:
     """Merge-on-read upsert: append the batch as the next delta
     version — an O(batch) write with NO read of the base (contrast
     merge_upsert's copy-on-write, which rewrites affected
@@ -118,7 +124,7 @@ def mor_upsert(
     version written.
     """
     v = (_mor_versions(path)[-1] + 1) if _mor_versions(path) else 1
-    updates.write.mode("errorifexists").format(fmt).save(
+    updates.write.mode("errorifexists").format(_MOR_FORMAT).save(
         f"{path.rstrip('/')}/_deltas/v={v}"
     )
     return v
@@ -128,7 +134,6 @@ def mor_read(
     spark,
     path: str,
     key_cols: list[str],
-    fmt: str = "parquet",
     as_of_version: int | None = None,
 ) -> DataFrame:
     """Reconciled view of a merge-on-read table: base ∪ deltas,
@@ -151,14 +156,16 @@ def mor_read(
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    base = spark.read.format(fmt).load(f"{path.rstrip('/')}/base")
+    base = spark.read.format(_MOR_FORMAT).load(f"{path.rstrip('/')}/base")
     if "_deleted" not in base.columns:
         base = base.withColumn("_deleted", F.lit(False))
     frames = [base.withColumn("_v", F.lit(0))]
     for v in _mor_versions(path):
         if as_of_version is not None and v > as_of_version:
             continue
-        d = spark.read.format(fmt).load(f"{path.rstrip('/')}/_deltas/v={v}")
+        d = spark.read.format(_MOR_FORMAT).load(
+            f"{path.rstrip('/')}/_deltas/v={v}"
+        )
         if "_deleted" not in d.columns:
             d = d.withColumn("_deleted", F.lit(False))
         frames.append(d.withColumn("_v", F.lit(v)))
@@ -173,17 +180,15 @@ def mor_read(
     )
 
 
-def mor_compact(
-    spark, path: str, key_cols: list[str], fmt: str = "parquet"
-) -> str:
+def mor_compact(spark, path: str, key_cols: list[str]) -> str:
     """Fold all deltas into a fresh base snapshot and clear them —
     the background job that bounds merge-on-read's read
     amplification. Reconcile → write new base → drop _deltas."""
     import shutil
 
-    merged = mor_read(spark, path, key_cols, fmt)
+    merged = mor_read(spark, path, key_cols)
     tmp = f"{path.rstrip('/')}/base_compacting"
-    merged.write.mode("overwrite").format(fmt).save(tmp)
+    merged.write.mode("overwrite").format(_MOR_FORMAT).save(tmp)
     shutil.rmtree(f"{path.rstrip('/')}/base")
     shutil.move(tmp, f"{path.rstrip('/')}/base")
     ddir = f"{path.rstrip('/')}/_deltas"

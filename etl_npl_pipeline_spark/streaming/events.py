@@ -1,15 +1,17 @@
-"""Structured Streaming over the events table.
+"""Structured Streaming over the events table, and the one drain path.
 
 The stream source is the events parquet read incrementally
-(``readStream``); tests and the driver run with
-``trigger(availableNow=True)`` so the stream drains the backlog and
+(``readStream``). Every stream in the package runs through
+``drain``, which processes the backlog available at start and
 stops — semantically the production shape (watermark + windowed
-state) with a bounded run.
+state) with a bounded run. ``run_stream_to_memory``,
+``run_stream_to_dir``, ``stream_upsert_mor`` and
+``stream_refresh_index`` are sinks on top of it.
 
 - ``stream_windowed_counts``: event-time tumbling window + watermark.
-  With availableNow over a bounded input it produces exactly the
-  batch tumbling-window aggregation (events_window_agg), which is
-  what the oracle checks.
+  Drained over a bounded input it produces exactly the batch
+  tumbling-window aggregation (events_window_agg), which is what the
+  oracle checks.
 - ``stream_sessionize``: custom stateful operator via
   ``applyInPandasWithState`` — gap-based sessions per user with a
   processing-timeout flush. The per-group state is a pandas-side
@@ -25,10 +27,12 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Callable
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType,
@@ -141,9 +145,9 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir).select(
         "user_id", (F.col("ts").cast("double") * 1_000_000).cast("long").alias("sec")
     )
-    # NoTimeout: the availableNow drain ends the stream after the
-    # backlog — idle-group timeout flushes (ProcessingTimeTimeout)
-    # are for continuously running streams and stall this trigger.
+    # NoTimeout: the drain ends the stream after the backlog —
+    # idle-group timeout flushes (ProcessingTimeTimeout) are for
+    # continuously running streams and stall a bounded drain.
     sessions = ev.groupBy("user_id").applyInPandasWithState(
         _session_fn,
         outputStructType=_SESSION_OUT,
@@ -151,11 +155,6 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # 8 state partitions (the drain default since r4): each partition
-    # is a parallel applyInPandasWithState Python worker, and the
-    # extra parallelism outweighs the per-partition state-commit cost
-    # (measured: 1.5 s at 8 vs 2.2 s at 4, sf0.1 — and the same
-    # sweep moved stream_user_totals 1.8 s -> 1.4 s steady-state).
     return run_stream_to_memory(
         sessions, output_mode="update", label="stream_sessionize"
     )
@@ -238,10 +237,9 @@ def stream_user_totals(
     spark: SparkSession, sf_dir: str, api: str = "auto"
 ) -> DataFrame:
     """Running per-user totals (event count + exact value cents) as
-    a custom stateful streaming operator, drained with availableNow
-    and folded to final rows (update-mode sinks may emit a user once
-    per micro-batch; max() of monotonic counters takes the final
-    state).
+    a custom stateful streaming operator, drained once and folded to
+    final rows (update-mode sinks may emit a user once per
+    micro-batch; max() of monotonic counters takes the final state).
 
     ``api``: 'tws' = Spark 4 transformWithStateInPandas
     (StatefulProcessor + ValueState — needs protobuf in the python
@@ -294,57 +292,32 @@ def stream_user_totals(
 
 
 # StreamingQueryProgress summaries of every drain this process ran,
-# keyed by the caller's label (unlabeled drains key by the memory
-# sink's generated name). bench.py publishes this to
-# bench_detail.json["streaming_progress"]; tests gate state bounds
-# on it. Each entry: batches, input_rows, duration_ms, and the MAX
-# stateOperators numRowsTotal across batches — the number that must
-# stay bounded for the watermark-eviction story to be real.
+# keyed by the drain's label. The tests gate on it: every drain must
+# leave an entry, append-mode aggregations must end with no state,
+# join state must stay within the input size, and a resumed drain
+# must not rerun committed batches (test_streaming_progress,
+# test_stream_recovery); bench.py also copies it into
+# bench_detail.json. Each entry: batches, input_rows, duration_ms,
+# and the MAX stateOperators numRowsTotal across batches — the
+# number that must stay bounded for the watermark-eviction story to
+# be real.
 DRAIN_PROGRESS: dict[str, dict] = {}
 
 
 # recentProgress is a ring buffer capped by
 # spark.sql.streaming.numRecentProgressUpdates (default 100); a drain
 # longer than the cap would silently under-count batches and could
-# miss the true state_rows_max peak. The drain harnesses raise the
-# cap to this value for the query's lifetime, and _progress_summary
-# records a truncation flag if a drain ever hits it anyway.
+# miss the true state_rows_max peak. drain() raises the cap to this
+# value for the query's lifetime, and _progress_summary records a
+# truncation flag if a drain ever hits it anyway.
 PROGRESS_BUFFER = 10_000
 
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def drain_confs(spark: SparkSession, state_partitions: int = 8):
-    """Scoped session confs for a ONE-SHOT availableNow drain — the
-    discipline run_stream_to_memory/run_stream_to_dir apply inline,
-    factored out so foreachBatch-style drains (ST15/ST16/ST17) get
-    the same treatment:
-
-    - whole-stage codegen OFF: a bounded drain runs each micro-batch
-      plan ONCE, so janino compilation never amortizes and dominates
-      the drain wall-clock (measured at sf0.1: ~1.25 s interpreted
-      vs 1.5-3.4 s compiled, identical results). Long-lived
-      production streams keep codegen on — the pin is scoped to the
-      drain and restored after.
-    - shuffle partitions pinned small: stateful queries open/commit
-      one state-store partition per shuffle partition per batch, and
-      even stateless foreachBatch aggregations plan their exchanges
-      at query start from this conf. On a real cluster size it to
-      ingest parallelism instead.
-    """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_cg = spark.conf.get("spark.sql.codegen.wholeStage")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(state_partitions)
-        )
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_cg)
+# session confs scoped to every drain — the rationale is on drain()
+_DRAIN_CONFS = {
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.streaming.numRecentProgressUpdates": str(PROGRESS_BUFFER),
+}
 
 
 def _progress_summary(q, output_mode: str) -> dict:
@@ -385,19 +358,93 @@ def _progress_summary(q, output_mode: str) -> dict:
     return summary
 
 
-def run_stream_to_memory(
+def drain(
     sdf: DataFrame,
+    label: str,
+    batch_fn: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
     output_mode: str = "append",
-    state_partitions: int = 8,
-    label: str | None = None,
-) -> DataFrame:
-    """Drain a streaming frame with availableNow into a memory sink
-    and return the materialized result as a batch DataFrame.
+    fail_at_batch: int | None = None,
+) -> StreamingQuery:
+    """Run ``sdf`` as a bounded stream — process the backlog available
+    at start, then stop — and return the terminated query. This is
+    the only code in the package that starts a stream; every sink
+    below and every plan-level fold goes through it.
 
-    Every drain records a StreamingQueryProgress summary in
-    DRAIN_PROGRESS[label] (batches, input rows, trigger time, max/
-    final state rows) — streaming state growth is observable and
-    gateable instead of asserted.
+    Sink: ``batch_fn(batch_df, batch_id)`` via foreachBatch, or, when
+    ``batch_fn`` is None, an in-memory table named ``query.name``.
+    ``checkpoint`` makes the drain resumable: a restart from the same
+    directory continues after the last committed batch.
+    ``fail_at_batch`` is the recovery-test hook for foreachBatch
+    sinks: it raises before that micro-batch reaches ``batch_fn``, so
+    the batch never commits.
+
+    The caller blocks until the query terminates. There is no
+    timeout: a timed-out query keeps running, and a fold that
+    returned then would answer from the batches that happened to have
+    landed. The query's progress summary is recorded in
+    ``DRAIN_PROGRESS[label]`` whether the drain succeeds or fails.
+
+    Session confs, set for the drain and restored after:
+
+    - ``spark.sql.shuffle.partitions`` = 8. Stateful queries fix their
+      state-store partition count to this conf at query start, and
+      each state partition pays an open/commit per micro-batch, so at
+      the batch default (32) a drain spends more time in state-store
+      bookkeeping than in the operator; stateless foreachBatch folds
+      plan their exchanges from it too. 8 rather than 4 because each
+      applyInPandasWithState partition is a parallel Python worker
+      (measured at sf0.1: stream_sessionize 1.5 s at 8 vs 2.2 s at 4,
+      stream_user_totals 1.8 s -> 1.4 s). A long-lived stream on a
+      real cluster should size it to ingest parallelism instead.
+    - Whole-stage codegen off. A bounded drain runs each micro-batch
+      plan once, so janino compilation never amortizes and dominates
+      the wall-clock (measured at sf0.1: ~1.25 s interpreted vs
+      1.5-3.4 s compiled for the stateful drains, identical results).
+      Long-lived streams should keep codegen on.
+    - ``spark.sql.streaming.numRecentProgressUpdates`` =
+      PROGRESS_BUFFER, so the summary sees every batch.
+    """
+    spark = sdf.sparkSession
+    if batch_fn is None:
+        writer = sdf.writeStream.format("memory").queryName(
+            f"mem_{uuid.uuid4().hex[:12]}"
+        )
+        summary_mode = output_mode
+    else:
+
+        def _batch(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_id == fail_at_batch:
+                raise RuntimeError(
+                    f"injected failure before batch {batch_id} commit"
+                )
+            batch_fn(batch_df, batch_id)
+
+        writer = sdf.writeStream.foreachBatch(_batch)
+        summary_mode = "foreachBatch"
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    prev = {k: spark.conf.get(k) for k in _DRAIN_CONFS}
+    try:
+        for k, v in _DRAIN_CONFS.items():
+            spark.conf.set(k, v)
+        q = writer.outputMode(output_mode).trigger(availableNow=True).start()
+        try:
+            q.awaitTermination()
+        finally:
+            DRAIN_PROGRESS[label] = _progress_summary(q, summary_mode)
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    return q
+
+
+def run_stream_to_memory(
+    sdf: DataFrame, label: str, output_mode: str = "append"
+) -> DataFrame:
+    """Drain a streaming frame into a memory sink and return the
+    materialized result as a batch DataFrame (progress in
+    DRAIN_PROGRESS[label]).
 
     Engine constraint (pinned in tests/test_streaming_pre_epoch.py):
     Spark's watermark initializes at epoch 0 and only advances, so
@@ -407,59 +454,17 @@ def run_stream_to_memory(
     them (late filtering is disabled there). Pre-epoch event time is
     therefore outside the watermarked-streaming contract; remap or
     batch-process historical archives that old.
-
-    Stateful streaming queries pin their state-store partition count
-    to ``spark.sql.shuffle.partitions`` at query start; each state
-    partition pays a fixed open/commit cost per micro-batch, so a
-    drain-style run with the batch default (32) spends more time in
-    HDFSBackedStateStore bookkeeping than in the operator. Pin a
-    smaller count for the stream only and restore the session conf
-    after the drain. On a real cluster with a long-lived stream,
-    size this to match ingest parallelism instead.
     """
-    spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_cg = spark.conf.get("spark.sql.codegen.wholeStage")
-    prev_pb = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates",
-            str(PROGRESS_BUFFER),
-        )
-        # A bounded drain runs each micro-batch plan ONCE — janino
-        # whole-stage compilation never amortizes and dominates the
-        # wall-clock (measured at sf0.1: ~1.25 s interpreted vs
-        # 1.5-3.4 s compiled for the stateful drains, identical
-        # results). Long-lived production streams should keep codegen:
-        # this pin is scoped to the drain harness and restored after.
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        DRAIN_PROGRESS[label or name] = _progress_summary(q, output_mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates", prev_pb
-        )
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_cg)
-    return spark.table(name)
+    q = drain(sdf, label, output_mode=output_mode)
+    return sdf.sparkSession.table(q.name)
 
 
 def run_stream_to_dir(
     sdf: DataFrame,
     out_root: str,
     checkpoint: str,
+    label: str,
     output_mode: str = "update",
-    state_partitions: int = 8,
-    label: str | None = None,
     fail_at_batch: int | None = None,
 ) -> None:
     """Durable drain: foreachBatch writes each micro-batch's rows to
@@ -474,52 +479,22 @@ def run_stream_to_dir(
     ``out_root`` back yields every batch's emission exactly once,
     with ``batch_id`` recovered as a partition column.
 
-    ``fail_at_batch`` injects a crash BEFORE that micro-batch
-    commits — the test hook tests/test_stream_recovery.py uses to
-    prove the recovery contract: restart from the same checkpoint,
-    and stateful operators resume from the state store with no row
-    lost or double-counted.
+    ``fail_at_batch`` (see drain) is the hook
+    tests/test_stream_recovery.py uses to prove the recovery
+    contract: restart from the same checkpoint, and stateful
+    operators resume from the state store with no row lost or
+    double-counted.
     """
-    spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_cg = spark.conf.get("spark.sql.codegen.wholeStage")
-    prev_pb = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if fail_at_batch is not None and batch_id == fail_at_batch:
-            raise RuntimeError(
-                f"injected failure before batch {batch_id} commit"
-            )
         batch_df.write.mode("overwrite").parquet(
             f"{out_root.rstrip('/')}/batch_id={batch_id}"
         )
 
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates",
-            str(PROGRESS_BUFFER),
-        )
-        q = (
-            sdf.writeStream.foreachBatch(_sink)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            DRAIN_PROGRESS[label or f"dir_{os.path.basename(out_root)}"] = (
-                _progress_summary(q, "foreachBatch")
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates", prev_pb
-        )
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_cg)
+    drain(
+        sdf, label, _sink, checkpoint=checkpoint, output_mode=output_mode,
+        fail_at_batch=fail_at_batch,
+    )
 
 
 # Version stride reserved per stream epoch: every (re)started stream
@@ -533,8 +508,6 @@ EPOCH_STRIDE = 1_000_000
 def stream_upsert_mor(
     sdf: DataFrame,
     path: str,
-    fmt: str = "parquet",
-    state_partitions: int = 4,
     fail_at_batch: int | None = None,
 ) -> None:
     """ST7: continuous upsert sink — drain a stream into a
@@ -577,19 +550,15 @@ def stream_upsert_mor(
     single-writer table format without a transaction log.
 
     Scale: each batch write distributes across executors like any
-    parquet write; the state-partition pin only matters when the
-    upstream has stateful ops (same rationale as
-    run_stream_to_memory). The epoch manifest is one tiny
-    driver-side JSON per checkpoint, touched once per micro-batch.
+    parquet write. The epoch manifest is one tiny driver-side JSON
+    per checkpoint, touched once per micro-batch. ``fail_at_batch``
+    is the recovery-test hook (see drain). Progress is recorded under
+    the label ``stream_upsert_read``.
     """
     import json
-    import os
 
-    from etl_npl_pipeline_spark.sinks import _mor_versions
+    from etl_npl_pipeline_spark.sinks import _MOR_FORMAT, _mor_versions
 
-    spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_pb = spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")
     root = path.rstrip("/")
     checkpoint = f"{root}/_checkpoint"
 
@@ -610,12 +579,6 @@ def stream_upsert_mor(
     epoch = manifest["epoch"]
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if fail_at_batch is not None and batch_id == fail_at_batch:
-            # recovery test hook: die BEFORE this batch commits —
-            # the restart must resume here from the checkpoint
-            raise RuntimeError(
-                f"injected failure before batch {batch_id} commit"
-            )
         v = epoch + batch_id + 1
         target = f"{ddir}/v={v}"
         if os.path.exists(target) and batch_id not in manifest["written"]:
@@ -623,35 +586,16 @@ def stream_upsert_mor(
                 f"mor delta v={v} exists but was not written by this "
                 f"stream checkpoint — concurrent writer on {root}"
             )
-        batch_df.write.mode("overwrite").format(fmt).save(target)
+        batch_df.write.mode("overwrite").format(_MOR_FORMAT).save(target)
         if batch_id not in manifest["written"]:
             manifest["written"].append(batch_id)
             with open(manifest_path, "w") as fh:
                 json.dump(manifest, fh)
 
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates",
-            str(PROGRESS_BUFFER),
-        )
-        q = (
-            sdf.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # foreachBatch drains bypass run_stream_to_memory — record
-        # progress here so ST7 is observable like the other streams
-        DRAIN_PROGRESS["stream_upsert_read"] = _progress_summary(
-            q, "foreachBatch"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates", prev_pb
-        )
+    drain(
+        sdf, "stream_upsert_read", _sink, checkpoint=checkpoint,
+        fail_at_batch=fail_at_batch,
+    )
 
 
 def stream_refresh_index(
@@ -680,17 +624,14 @@ def stream_refresh_index(
     appended rows exceed the source count).
 
     Empty micro-batches are skipped (no segment dirs, no version
-    bump). ``fail_at_batch`` injects a crash BEFORE that batch's
-    refresh for recovery tests: the restart resumes from the
+    bump). ``fail_at_batch`` (see drain) injects a crash BEFORE that
+    batch's refresh for recovery tests: the restart resumes from the
     checkpoint and the manifest shows each content key exactly once.
+    Progress is recorded under the label ``stream_index_refresh``.
     """
     from etl_npl_pipeline_spark.operators.ann_index import refresh_ann_index
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if fail_at_batch is not None and batch_id == fail_at_batch:
-            raise RuntimeError(
-                f"injected failure before batch {batch_id} refresh"
-            )
         if batch_df.isEmpty():
             return
         key = batch_df.agg(
@@ -710,13 +651,7 @@ def stream_refresh_index(
             batch_key=f"content:{key}",
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    DRAIN_PROGRESS["stream_index_refresh"] = _progress_summary(
-        q, "foreachBatch"
+    drain(
+        sdf, "stream_index_refresh", _sink, checkpoint=checkpoint,
+        fail_at_batch=fail_at_batch,
     )

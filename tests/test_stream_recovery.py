@@ -107,6 +107,7 @@ def test_stateful_totals_survive_mid_drain_kill(spark, sf_dir, tmp_path):
         ckpt,
         label="recovery_totals_resume",
     )
+    assert not spark.streams.active
 
     got = _rows(_fold_totals(spark, out_root))
     expected = _rows(
@@ -148,6 +149,7 @@ def test_resume_skips_committed_batches(spark, sf_dir, tmp_path):
         ckpt,
         label="recovery_skip_resume",
     )
+    assert not spark.streams.active
     # 6 source files → batches 0..5; crash before 2 → resume runs 2..5
     resumed = DRAIN_PROGRESS["recovery_skip_resume"]["batches"]
     assert resumed <= 4, f"resume reran committed batches ({resumed})"
@@ -186,8 +188,10 @@ def test_mor_upsert_recovers_to_batch_oracle(spark, sf_dir, tmp_path):
     )
     with pytest.raises(Exception, match="injected failure|STREAM"):
         stream_upsert_mor(updates, tbl, fail_at_batch=3)
+    assert not spark.streams.active
 
     stream_upsert_mor(updates, tbl)  # resume, same checkpoint
+    assert not spark.streams.active
 
     got = _rows(sinks.mor_read(spark, tbl, key_cols=["event_id"]))
     batch_updates = (
@@ -241,10 +245,12 @@ def test_stream_index_refresh_crash_resume_exactly_once(spark, sf_dir, tmp_path)
 
     with pytest.raises(Exception, match="injected failure|STREAM"):
         stream_refresh_index(vstream_fn(), idx, checkpoint, fail_at_batch=1)
+    assert not spark.streams.active
     man_mid = AI.read_manifest(idx)
     assert len(man_mid["appends"]) == 1  # batch 0 landed, batch 1 did not
 
     stream_refresh_index(vstream_fn(), idx, checkpoint)  # resume
+    assert not spark.streams.active
     man = AI.read_manifest(idx)
     keys = [a["batch_key"] for a in man["appends"]]
     assert len(keys) == 2 and len(set(keys)) == 2

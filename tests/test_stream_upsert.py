@@ -38,6 +38,7 @@ def test_stream_upsert_matches_batch(spark, sf_dir, tmp_path):
         .withColumn("value", F.col("value") * 2)
     )
     stream_upsert_mor(updates, tbl)
+    assert not spark.streams.active
 
     got = _rows(sinks.mor_read(spark, tbl, key_cols=["event_id"]))
 
